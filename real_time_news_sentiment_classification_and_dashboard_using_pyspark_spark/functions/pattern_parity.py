@@ -25,16 +25,13 @@ assessment structure. A production deployment swaps ``MINI_LEXICON``
 for the full pattern lexicon file; the algorithm does not change.
 
 tests/test_textblob_parity.py drives news_data.json through the ENGINE
-batch pipeline (transform_articles with this scorer) and asserts exact
-equality with sentiment_results.csv.
+batch pipeline (transform_articles with ``pattern_polarity_arrow``) and
+asserts exact equality with sentiment_results.csv.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import numpy as np
 
 # word -> (polarity, subjectivity, intensity). intensity != 1.0 marks an
 # intensifier: it chains onto the NEXT lexicon word (pattern semantics).
@@ -107,16 +104,13 @@ def pattern_polarity(text: str | None) -> float:
     return sum(max(-1.0, min(c["p"], 1.0)) for c in chunks) / float(len(chunks))
 
 
-def parity_polarity_expr(text_col: Column | str) -> Column:
-    """Drop-in replacement for ``sentiment.polarity_expr`` scoring with
-    the pattern-parity lexicon (Arrow-batched; used by the golden test
-    and by anyone migrating from the reference who needs bit-identical
-    TextBlob outputs). The pandas_udf is built lazily — constructing it
-    needs an active SparkSession, which plain module import must not."""
-
-    def _batch(texts: pd.Series) -> pd.Series:
-        return texts.map(pattern_polarity)
-
-    udf = F.pandas_udf(_batch, "double")
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return udf(c)
+def pattern_polarity_arrow(combined) -> np.ndarray:
+    """``transform_articles`` scorer with the pattern-parity lexicon
+    (combined ``pa.Array`` of strings -> float64 polarities), for the
+    golden test and for anyone migrating from the reference who needs
+    bit-identical TextBlob outputs."""
+    return np.fromiter(
+        (pattern_polarity(t) for t in combined.to_pylist()),
+        dtype=np.float64,
+        count=len(combined),
+    )

@@ -112,8 +112,8 @@ def polarity_expr(text_col: Column | str) -> Column:
     corpus projection; the barrier changed nothing because consumers
     were NOT re-inlining it). The fold stays as the expression-path
     scorer; the batch/streaming article pipeline scores via the
-    bit-equal Arrow kernel instead (pipeline._score_articles_kernel,
-    guide §4.2)."""
+    bit-equal Arrow scorer instead (pipeline.lexicon_polarity, guide
+    §4.2)."""
     matched = F.filter(
         F.transform(tokens(text_col), lambda t: F.element_at(lexicon_map(), t)),
         lambda v: v.isNotNull(),

@@ -8,8 +8,10 @@ Stage mapping (SURVEY §2/§3.1):
   CSV A10 + NDJSON A11 sinks -> summary G2+F10.
 
 Differences from the reference, on purpose:
-- scoring is the expression lexicon (functions.sentiment.polarity_expr),
-  not a row-at-a-time Python UDF — whole-stage codegen end to end;
+- clean, filter, combine and score run as one Arrow batch kernel
+  (``_score_articles_kernel``), not a row-at-a-time Python UDF; the
+  default scorer is the exact-integer lexicon of
+  ``functions.sentiment``, bit-identical to ``polarity_expr``;
 - writes are distributed ``df.write`` (the reference collects everything
   to the driver first, work.py:261 — its scalability cliff);
 - the same ``transform_articles`` runs unchanged under Structured
@@ -22,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions.sentiment import classify_expr, confidence_expr, polarity_expr
-from .functions.text import clean_text
+from .functions.sentiment import LEXICON, classify_expr, confidence_expr
 from .sources.articles import read_articles, repair_schema
 
 FINAL_COLUMNS = [
@@ -44,14 +45,41 @@ FINAL_COLUMNS = [
 _CLEAN_RE2 = "[^a-zA-Z \t\n\x0B\f\r]"
 
 
-def _score_articles_kernel():
-    """mapInPandas kernel: clean -> filter -> combine -> lexicon score,
-    all Arrow/C++ per batch (guide §4.2) — the per-article hot path of
-    the streaming drain, formerly four INTERPRETED HOF/regex expression
-    passes (measured ~3.8 s per 25k-article batch vs ~3.0 with this
-    kernel, and the clean itself drops from java-regex to RE2).
+def lexicon_polarity(combined):
+    """Kernel scorer: exact-integer lexicon polarity of each combined
+    text (``pa.Array`` of strings -> float64 numpy array).
 
-    Bit-equality with the expression path, piece by piece:
+    A token equals a lexicon word exactly when ' word ' occurs in the
+    space-DOUBLED padded text (doubling gives adjacent tokens their own
+    delimiters, so non-overlapping count_substring is exact; lexicon
+    words are alphabetic, and clean keeps non-space whitespace INSIDE
+    tokens exactly like the split-on-space tokenizer). Counts x
+    centipoint scores give the same exact int64 sum and count as
+    ``polarity_expr``'s fold, then the identical single IEEE division;
+    no match lands on 0.0."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    doubled = pc.replace_substring(combined, " ", "  ")
+    padded = pc.binary_join_element_wise(pa.scalar(" "), doubled, pa.scalar(" "), "")
+    n = np.zeros(len(combined), dtype=np.int64)
+    s = np.zeros(len(combined), dtype=np.int64)
+    for w, sc in LEXICON:
+        c = pc.count_substring(padded, f" {w} ").to_numpy(zero_copy_only=False)
+        c = np.asarray(c, dtype=np.int64)
+        n += c
+        s += c * sc
+    return np.where(n > 0, s.astype("float64") / (n * 100), 0.0)
+
+
+def _score_articles_kernel(scorer):
+    """mapInPandas kernel: clean -> filter -> combine -> ``scorer``, all
+    Arrow/C++ per batch (guide §4.2) — the per-article hot path of the
+    streaming drain.
+
+    Bit-equality with the column-expression rendering
+    (``functions.text.clean_text``, ``concat_ws``), piece by piece:
     - clean: RE2 strip of the same explicit char class (`_CLEAN_RE2` —
       Java's \\s spelled out because RE2's omits \\x0B), then
       utf8_lower — the post-strip alphabet is pure ASCII, where simple
@@ -60,20 +88,10 @@ def _score_articles_kernel():
       `trim` strips spaces only.
     - combined: binary_join_element_wise(title_clean, text_clean, ' ',
       skip-nulls) == concat_ws(' ', ...).
-    - polarity: token == lexicon word exactly when ' word ' occurs in
-      the space-DOUBLED padded text (doubling gives adjacent tokens
-      their own delimiters, so non-overlapping count_substring is
-      exact; lexicon words are alphabetic, clean keeps non-space
-      whitespace INSIDE tokens exactly like the split-on-space
-      tokenizer). Counts x centipoint scores give the SAME exact int64
-      sum and count as the expression fold, then the identical single
-      IEEE division; no-match lands on 0.0.
     Pinned by tests/test_batch_pipeline.py (kernel vs expression path
     over the fixture corpus) and the streaming golden tests."""
-    from .functions.sentiment import LEXICON
 
     def fn(batches):
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -101,26 +119,12 @@ def _score_articles_kernel():
             combined = pc.binary_join_element_wise(
                 tc, xc, " ", null_handling="skip"
             )
-            doubled = pc.replace_substring(combined, " ", "  ")
-            padded = pc.binary_join_element_wise(
-                pa.scalar(" "), doubled, pa.scalar(" "), ""
-            )
-            n = np.zeros(len(pdf), dtype=np.int64)
-            s = np.zeros(len(pdf), dtype=np.int64)
-            for w, sc in LEXICON:
-                c = pc.count_substring(padded, f" {w} ").to_numpy(
-                    zero_copy_only=False
-                )
-                c = np.asarray(c, dtype=np.int64)
-                n += c
-                s += c * sc
-            pol = np.where(n > 0, s.astype("float64") / (n * 100), 0.0)
-            yield pdf.assign(polarity=pol)
+            yield pdf.assign(polarity=scorer(combined))
 
     return fn
 
 
-def transform_articles(df: DataFrame, polarity_fn=polarity_expr) -> DataFrame:
+def transform_articles(df: DataFrame, polarity_fn=lexicon_polarity) -> DataFrame:
     """Project -> clean -> filter -> concat -> score -> classify ->
     confidence -> final projection. Pure narrow transformations: works
     identically on a batch or streaming DataFrame, no shuffle at all.
@@ -136,36 +140,21 @@ def transform_articles(df: DataFrame, polarity_fn=polarity_expr) -> DataFrame:
     - classify thresholds +-0.1 exclusive, null -> Neutral
       (work.py:96-105); confidence 0.5/0.2 (streaming_pipeline.py:146-151).
 
-    ``polarity_fn`` swaps the scorer (column-expression signature):
-    default is the lexicon scorer — rendered since r14 as the Arrow
-    batch kernel (`_score_articles_kernel`, bit-identical by
-    construction and by test); pass
-    ``functions.pattern_parity.parity_polarity_expr`` for bit-identical
-    TextBlob golden parity (tests/test_textblob_parity.py), which takes
-    the original expression path.
+    ``polarity_fn`` swaps the scorer: a function from the combined
+    ``pa.Array`` of strings to float64 polarities, run inside
+    ``_score_articles_kernel``. The default is ``lexicon_polarity``;
+    ``functions.pattern_parity.pattern_polarity_arrow`` gives TextBlob
+    golden parity (tests/test_textblob_parity.py).
     """
-    projected = repair_schema(df)
-    if polarity_fn is polarity_expr:
-        scored0 = projected.select(
-            "id", "title", "description", "url", "publishedAt", "fetched_at"
-        ).mapInPandas(
-            _score_articles_kernel(),
+    scored0 = (
+        repair_schema(df)
+        .select("id", "title", "description", "url", "publishedAt", "fetched_at")
+        .mapInPandas(
+            _score_articles_kernel(polarity_fn),
             "id string, title string, description string, url string, "
             "publishedAt string, fetched_at string, polarity double",
         )
-    else:
-        cleaned = projected.withColumns(
-            {
-                "title_clean": clean_text("title"),
-                "text_clean": clean_text("description"),
-            }
-        )
-        filtered = cleaned.filter(
-            F.col("text_clean").isNotNull() & (F.trim(F.col("text_clean")) != "")
-        )
-        scored0 = filtered.withColumn(
-            "combined_text", F.concat_ws(" ", "title_clean", "text_clean")
-        ).withColumn("polarity", polarity_fn(F.col("combined_text")))
+    )
     scored = (
         scored0.withColumn("sentiment", classify_expr("polarity"))
         .withColumn("sentiment_confidence", confidence_expr("polarity"))

@@ -207,13 +207,3 @@ def repair_schema(df: DataFrame) -> DataFrame:
     if "text" not in out.columns:
         out = out.withColumn("text", F.col("description"))
     return out
-
-
-def write_articles_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """NDJSON sink (A2/A11)."""
-    df.write.mode(mode).json(path)
-
-
-def write_articles_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink with header (A10)."""
-    df.write.mode(mode).option("header", True).csv(path)

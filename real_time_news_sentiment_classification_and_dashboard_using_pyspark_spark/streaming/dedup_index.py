@@ -20,8 +20,7 @@ Layout under ``store_root``:
   table files are HARD-LINKED from the previous generation, so a
   generation costs O(delta) bytes, not O(corpus);
 - ``_CURRENT``  — sidecar naming the newest complete generation
-  (atomic tmp+rename, same pattern as the metrics ``_LATEST``
-  sidecar). Readers resolve through ``current_store_path``.
+  (atomic tmp+rename). Readers resolve through ``current_store_path``.
 
 Exactly-once effect under foreachBatch's at-least-once contract: a
 generation directory is only visible after the store build's own

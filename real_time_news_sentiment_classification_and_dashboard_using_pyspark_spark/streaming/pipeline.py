@@ -4,7 +4,7 @@ The reference starts FOUR independent streaming queries over the same
 source (console/file/memory/foreachBatch, streaming_pipeline.py:196-230)
 — each with its own micro-batch scheduler re-listing the input directory
 (J4, SURVEY §4.3). This module is the corrected architecture: ONE query,
-fan-out inside ``foreachBatch`` with ``persist()``; plus the streaming
+fan-out inside ``foreachBatch`` over a single pass; plus the streaming
 semantics the reference lacks entirely (watermarks, event-time windows,
 streaming dedup — SURVEY §2.J 'absent streaming semantics').
 
@@ -23,26 +23,29 @@ from ..pipeline import transform_articles
 from ..sources.articles import stream_articles
 
 
-def _counts_df(session: SparkSession, items: list[tuple[str, int]]) -> DataFrame:
-    """Tiny (class, count) relation built as a JVM-side VALUES literal.
+def _counts_df(
+    session: SparkSession, items: list[tuple[str, int, int]]
+) -> DataFrame:
+    """Tiny (sentiment, cnt, total) relation built as a JVM-side VALUES
+    literal.
 
     ``session.createDataFrame(rows)`` would parallelize the rows into a
     default-parallelism pickled Python RDD — every downstream task then
-    round-trips a Python worker (a ``coalesce(1)`` write evaluates all
-    N slices through one worker pipe sequentially: ~5s for 3 rows,
-    measured). A VALUES LocalRelation stays whole-stage-codegen JVM all
-    the way and writes in one sub-second task."""
+    round-trips a Python worker (~5s for 3 rows, measured). A VALUES
+    LocalRelation stays whole-stage-codegen JVM all the way and writes
+    sub-second."""
     if not items:
         return session.sql(
-            "SELECT CAST(NULL AS STRING) AS sentiment, CAST(NULL AS BIGINT) AS cnt "
-            "WHERE FALSE"
+            "SELECT CAST(NULL AS STRING) AS sentiment, CAST(NULL AS BIGINT) AS cnt, "
+            "CAST(NULL AS BIGINT) AS total WHERE FALSE"
         )
     values = ", ".join(
-        "('{}', {})".format(s.replace("'", "''"), int(c)) for s, c in items
+        "('{}', {}, {})".format(s.replace("'", "''"), int(c), int(t))
+        for s, c, t in items
     )
     return session.sql(
-        f"SELECT sentiment, CAST(cnt AS BIGINT) AS cnt "
-        f"FROM (VALUES {values}) AS t(sentiment, cnt)"
+        f"SELECT sentiment, CAST(cnt AS BIGINT) AS cnt, CAST(total AS BIGINT) AS total "
+        f"FROM (VALUES {values}) AS t(sentiment, cnt, total)"
     )
 
 
@@ -52,140 +55,22 @@ def scored_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return transform_articles(stream_articles(spark, input_dir))
 
 
-# Compacted restart seed cadence (r6 verdict #6): every SUMMARY_EVERY
-# batches the driver's running totals are snapshotted to
-# ``metrics_summary`` — O(classes) rows carrying last_batch_id. Restart
-# then reads that one tiny file and folds only the per-batch metrics
-# TAIL (batch_id > last — at most SUMMARY_EVERY dirs) instead of
-# scanning every accumulated batch dir, so cold-restart seed cost is
-# bounded by the snapshot cadence, not stream lifetime. foreachBatch is
-# sequential, so committed metric batch_ids always form a contiguous
-# prefix and last_batch_id fully encodes the applied-set below it.
-SUMMARY_EVERY = 16
-
-
-def _advance_latest_sidecar(metrics_dir: str, batch_id: int) -> None:
-    """Monotonically record the newest committed metrics batch id in a
-    ``_LATEST`` sidecar (underscore prefix: invisible to parquet
-    discovery, like ``_SUCCESS``). Written AFTER the batch's metrics
-    partition lands, so the sidecar is never ahead of committed data;
-    a replayed old batch cannot regress it. This is what lets the
-    restart seed's NON-LOCAL fallback read explicit tail paths instead
-    of paying full partition discovery (r7 verdict #7). Local-FS
-    implementation (atomic tmp+rename); on an object store the
-    equivalent is one small PUT per batch — same cost class — and the
-    sidecar being unwritable simply leaves the generic-scan fallback,
-    so this is an optimization, never a correctness dependency."""
-    import os
-
-    path = os.path.join(metrics_dir, "_LATEST")
+def _totals_through(session: SparkSession, output_dir: str, batch_id: int) -> dict[str, int]:
+    """Running class totals through ``batch_id``, read from that one
+    metrics partition by explicit path (no partition discovery). Empty
+    before batch 0, and when the partition is absent (no earlier batch
+    wrote to this output directory)."""
+    if batch_id < 0:
+        return {}
     try:
-        prev = -1
-        try:
-            with open(path) as fh:
-                prev = int(fh.read().strip())
-        except (OSError, ValueError):
-            pass
-        if batch_id > prev:
-            tmp = f"{path}.tmp{os.getpid()}"
-            with open(tmp, "w") as fh:
-                fh.write(str(batch_id))
-            os.replace(tmp, path)
-    except OSError:
-        pass
-
-
-def _read_latest_sidecar(metrics_dir: str) -> int | None:
-    import os
-
-    try:
-        with open(os.path.join(metrics_dir, "_LATEST")) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
-def seed_totals(
-    session: SparkSession, output_dir: str
-) -> tuple[dict[str, int], set[int]]:
-    """Recover (running class totals, applied batch-id set) from a
-    stream's committed sinks — the cold-restart seed. Module-level so
-    the restart-at-scale test can time it in isolation. Unexpected
-    failures propagate (the caller retries next micro-batch rather than
-    silently zeroing the recovered totals)."""
-    totals: dict[str, int] = {}
-    applied: set[int] = set()
-    last = -1
-    try:
-        for r in session.read.parquet(f"{output_dir}/metrics_summary").collect():
-            totals[r["sentiment"]] = int(r["cnt"])
-            last = max(last, int(r["last_batch_id"]))
-    except Exception:  # noqa: BLE001 - absent or half-written
-        # snapshot unreadable (first run, or crash mid-overwrite): fall
-        # back to the full per-batch scan below
-        totals.clear()
-        last = -1
-    applied.update(range(last + 1))
-    metrics_dir = f"{output_dir}/metrics"
-    # Tail discovery. Spark's own partition discovery stats every leaf
-    # FILE of every batch dir (a 1,200-dir sink costs a 1,200-task
-    # listing job before pruning can drop anything). On a local path one
-    # readdir gives the partition NAMES, and the tail dirs are then read
-    # explicitly — O(tail) stat work. A non-local sink (s3/hdfs URI)
-    # takes the generic read + partition-filter path; its object-store
-    # LIST is the same single-listing cost class.
-    import os
-
-    tail = None
-    if os.path.isdir(metrics_dir):
-        try:
-            tail_ids = sorted(
-                bid
-                for e in os.listdir(metrics_dir)
-                if e.startswith("batch_id=")
-                and (bid := int(e.split("=", 1)[1])) > last
-            )
-        except (OSError, ValueError):
-            tail_ids = None
-        if tail_ids == []:
-            return totals, applied  # summary already covers every batch
-        if tail_ids is not None:
-            tail = session.read.option("basePath", metrics_dir).parquet(
-                *[os.path.join(metrics_dir, f"batch_id={i}") for i in tail_ids]
-            )
-    if tail is None:
-        # generic (non-listdir) path: the _LATEST sidecar plus the
-        # contiguous-commit invariant fully determine the tail dirs, so
-        # the seed reads EXPLICIT paths — no partition discovery at all
-        # (r7 verdict #7: this branch previously re-paid the full
-        # listing it existed to avoid). A sidecar that is stale by a
-        # crash is never AHEAD of committed metrics, and any batch it
-        # misses is also uncommitted in the streaming checkpoint, so
-        # the restarted query replays it idempotently.
-        latest = _read_latest_sidecar(metrics_dir)
-        if latest is not None:
-            if latest <= last:
-                return totals, applied
-            try:
-                tail = session.read.option("basePath", metrics_dir).parquet(
-                    *[
-                        os.path.join(metrics_dir, f"batch_id={i}")
-                        for i in range(last + 1, latest + 1)
-                    ]
-                )
-            except AnalysisException:
-                tail = None  # tampered/missing dirs: full-scan fallback
-    if tail is None:
-        try:
-            m = session.read.parquet(metrics_dir)
-        except AnalysisException:
-            return totals, applied  # first ever run: no metrics sink yet
-        tail = m.filter(F.col("batch_id") > last)
-    for r in tail.groupBy("sentiment").agg(F.sum("cnt").alias("cnt")).collect():
-        totals[r["sentiment"]] = totals.get(r["sentiment"], 0) + int(r["cnt"])
-    for r in tail.select("batch_id").distinct().collect():
-        applied.add(int(r["batch_id"]))
-    return totals, applied
+        rows = (
+            session.read.schema("sentiment string, cnt bigint, total bigint")
+            .parquet(f"{output_dir}/metrics/batch_id={batch_id}")
+            .collect()
+        )
+    except AnalysisException:
+        return {}
+    return {r["sentiment"]: int(r["total"]) for r in rows}
 
 
 def batch_fanout(
@@ -199,50 +84,43 @@ def batch_fanout(
       micro-batch rewrites its own partition instead of appending
       duplicates (idempotent under foreachBatch's at-least-once
       contract), and the commit never has to list or stage the other
-      partitions the way dynamic-partition-overwrite does — per-batch
-      commit cost stays O(1) in the number of past batches. Readers see
-      the identical hive layout (``batch_id`` recovered by partition
-      discovery).
+      partitions — per-batch commit cost stays O(1) in the number of
+      past batches. Readers see the hive layout (``batch_id`` recovered
+      by partition discovery).
     - Per-class counts ride on the scored write via ``Observation``
-      (map-side accumulators collected with the write's own job), so a
-      micro-batch costs ONE pass over the data — no persist + second
-      aggregation scan.
-    - The global view is maintained incrementally: driver-side running
-      totals (O(classes) memory) folded forward from each batch's tiny
-      count rows, seeded once per process from the committed metrics
-      sink (O(batches) rows — never the corpus). Each refresh publishes
-      a LocalRelation; no trigger rescans ``scored/``. Driver-side twin
+      (accumulators collected with the write's own job), so a
+      micro-batch costs ONE pass over the data.
+    - ``metrics/batch_id=N`` holds one row per class seen through batch
+      N: ``cnt`` is the class count of batch N alone (0 when absent
+      from it), ``total`` the running class total through batch N.
+      Summing ``cnt`` over all partitions gives the scored row count.
+    - The running totals live in the closure as ``(last_id, totals)``.
+      Batch N folds onto them when ``N == last_id + 1``; otherwise (a
+      restarted process, or a retry of the same id) it starts from
+      ``metrics/batch_id=N-1``. The closure advances only after both
+      writes land, so a retry recomputes from the same base and
+      overwrites the same partitions. Structured Streaming re-delivers
+      only the batch its offset log records as uncommitted, so the
+      totals are exact after a crash at any point of the fan-out.
+    - The global view is published from the same tiny relation (a
+      LocalRelation): no trigger rescans ``scored/``. Driver-side twin
       of ``stateful.running_sentiment_totals``.
     - ``console=True`` adds the reference's console sink (A6,
       streaming_pipeline.py:196-203) as a debug print of each
       micro-batch — inside the same single query, not a second
       competing streaming query."""
+    last_id = -1
     totals: dict[str, int] = {}
-    applied: set[int] = set()
-    seeded = False
-
-    def _seed(session: SparkSession) -> None:
-        # restart recovery: fold in per-batch metrics committed by a
-        # previous process (seed_totals). Runs once; batches already in
-        # the sink are recorded in `applied` so an uncommitted-then-
-        # replayed batch never counts twice. A seed_totals failure
-        # propagates, leaving seeded=False — the next micro-batch
-        # retries instead of silently zeroing the recovered totals
-        # (sinks would stay correct, the view not).
-        nonlocal seeded
-        if seeded:
-            return
-        t, a = seed_totals(session, output_dir)
-        totals.clear()
-        totals.update(t)
-        applied.update(a)
-        seeded = True
 
     _CLASSES = ("Positive", "Negative", "Neutral")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal last_id, totals
         session = batch_df.sparkSession
-        _seed(session)
+        if batch_id == last_id + 1:
+            base = totals
+        else:
+            base = _totals_through(session, output_dir, batch_id - 1)
         if console:
             print(f"-------- micro-batch {batch_id} --------")
             batch_df.persist()  # show() is a second action only in debug mode
@@ -263,30 +141,20 @@ def batch_fanout(
             counts = {
                 c: int(v) for c, v in obs.get.items() if v  # drop absent classes
             }
-            (
-                _counts_df(session, sorted(counts.items()))
-                .write.mode("overwrite")
-                .parquet(f"{output_dir}/metrics/batch_id={batch_id}")
+            new_totals = dict(base)
+            for c, v in counts.items():
+                new_totals[c] = new_totals.get(c, 0) + v
+            metrics = _counts_df(
+                session,
+                [(c, counts.get(c, 0), t) for c, t in sorted(new_totals.items())],
             )
-            _advance_latest_sidecar(f"{output_dir}/metrics", batch_id)
-            if batch_id not in applied:
-                for c, v in counts.items():
-                    totals[c] = totals.get(c, 0) + v
-                applied.add(batch_id)
-            if batch_id % SUMMARY_EVERY == 0:
-                # snapshot AFTER this batch's metrics landed, so a crash
-                # between the two leaves the summary behind (never
-                # ahead) — the seed's tail fold closes the gap
-                (
-                    _counts_df(session, sorted(totals.items()))
-                    .withColumn("last_batch_id", F.lit(max(applied)))
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(f"{output_dir}/metrics_summary")
-                )
-            _counts_df(session, sorted(totals.items())).createOrReplaceGlobalTempView(
-                memory_table
+            metrics.write.mode("overwrite").parquet(
+                f"{output_dir}/metrics/batch_id={batch_id}"
             )
+            metrics.select(
+                "sentiment", F.col("total").alias("cnt")
+            ).createOrReplaceGlobalTempView(memory_table)
+            last_id, totals = batch_id, new_totals
         finally:
             if console:
                 batch_df.unpersist()
@@ -305,12 +173,11 @@ def start_pipeline(
     memory_table: str = "news_sentiment",
     console: bool = False,
 ) -> StreamingQuery:
-    """Single-query fan-out (fixes J4): per micro-batch, persist once,
-    then (1) write scored rows to a batch_id-partitioned parquet sink,
-    (2) write per-batch sentiment counts to a metrics dir, (3) refresh
-    an in-memory global view for ad-hoc SQL — three sinks, one source
-    read. Idempotency and the incremental view contract live in
-    ``batch_fanout``.
+    """Single-query fan-out (fixes J4): per micro-batch, (1) write scored
+    rows to a batch_id-partitioned parquet sink, (2) write per-batch and
+    running sentiment counts to a metrics dir, (3) refresh an in-memory
+    global view for ad-hoc SQL — three sinks, one source read.
+    Idempotency and the running-total contract live in ``batch_fanout``.
 
     ``available_now=True`` drains all pending files and stops — the
     deterministic test/backfill mode (subsumes the reference's

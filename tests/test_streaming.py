@@ -550,24 +550,18 @@ def test_near_dup_replay_not_swallowed_by_own_index_entry(spark):
     assert dropped == other_matched  # dropped iff matched a DIFFERENT doc
 
 
-def test_restart_seed_bounded_by_metrics_summary(spark, tmp_path, monkeypatch):
-    """r6 verdict #6: cold-restart seeding against a LONG-LIVED stream's
-    sink — 1,200 accumulated per-batch metric dirs, synthesized directly
-    (pyarrow) so the test measures the seed path, not a 1,200-batch
-    drain. Asserts the compacted path (metrics_summary + tail fold)
-    recovers byte-identical totals to the full-scan fallback, never
-    double-counts a replayed batch, and is measurably faster than
-    scanning every batch dir."""
+def test_restart_reads_one_metrics_partition(spark, tmp_path):
+    """Cold restart against a long-lived stream's sink: 1,200 metric
+    partitions written (pyarrow, so the test measures the restart path,
+    not a 1,200-batch drain), then every partition except the last
+    deleted. A fresh closure must fold batch 1,200 forward exactly from
+    ``batch_id=1199`` alone, and a replay of that batch must leave the
+    totals unchanged."""
     import os
     import shutil
-    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from real_time_news_sentiment_classification_and_dashboard_using_pyspark_spark.streaming.pipeline import (
-        batch_fanout,
-    )
 
     out = str(tmp_path / "out")
     n_batches = 1200
@@ -576,84 +570,17 @@ def test_restart_seed_bounded_by_metrics_summary(spark, tmp_path, monkeypatch):
         os.makedirs(d)
         pq.write_table(
             pa.table(
-                {"sentiment": ["Positive", "Negative"], "cnt": pa.array([2, 1], "int64")}
+                {
+                    "sentiment": ["Negative", "Positive"],
+                    "cnt": pa.array([1, 2], "int64"),
+                    "total": pa.array([b + 1, 2 * (b + 1)], "int64"),
+                }
             ),
             os.path.join(d, "part-0.parquet"),
         )
-    # summary as a prior process would have left it: snapshot at batch
-    # 1184, so the seed's tail fold covers batches 1185-1199 only
-    sd = os.path.join(out, "metrics_summary")
-    os.makedirs(sd)
-    pq.write_table(
-        pa.table(
-            {
-                "sentiment": ["Positive", "Negative"],
-                "cnt": pa.array([2 * 1185, 1185], "int64"),
-                "last_batch_id": pa.array([1184, 1184], "int64"),
-            }
-        ),
-        os.path.join(sd, "part-0.parquet"),
-    )
+    for b in range(n_batches - 1):
+        shutil.rmtree(os.path.join(out, "metrics", f"batch_id={b}"))
 
-    from real_time_news_sentiment_classification_and_dashboard_using_pyspark_spark.streaming.pipeline import (
-        seed_totals,
-    )
-
-    # warmup: absorb the session's one-time parquet-reader costs so the
-    # two timed seeds below differ only in strategy
-    spark.read.parquet(os.path.join(out, "metrics", "batch_id=0")).collect()
-
-    t0 = time.time()
-    totals_fast, applied_fast = seed_totals(spark, out)
-    seed_fast = time.time() - t0
-    assert totals_fast == {"Positive": 2 * n_batches, "Negative": n_batches}
-    assert applied_fast == set(range(n_batches))
-
-    # fallback: no summary -> full per-batch scan, identical recovery
-    shutil.rmtree(sd)
-    t0 = time.time()
-    totals_full, applied_full = seed_totals(spark, out)
-    seed_full = time.time() - t0
-    assert totals_full == totals_fast
-    assert applied_full == applied_fast
-    # the compacted seed reads 1 snapshot + a 15-dir tail instead of
-    # 1,200 batch dirs — wall-clock evidence, not just row counts
-    assert seed_fast < seed_full, (seed_fast, seed_full)
-    print(f"seed cost: with summary {seed_fast:.2f}s vs full scan {seed_full:.2f}s")
-
-    # GENERIC (non-local) path (r7 verdict #7): with the local listdir
-    # branch disabled, the _LATEST sidecar must bound the tail read to
-    # explicit batch paths — no partition discovery — and recover the
-    # identical state, measurably faster than the 1,200-dir full scan
-    os.makedirs(sd)
-    pq.write_table(
-        pa.table(
-            {
-                "sentiment": ["Positive", "Negative"],
-                "cnt": pa.array([2 * 1185, 1185], "int64"),
-                "last_batch_id": pa.array([1184, 1184], "int64"),
-            }
-        ),
-        os.path.join(sd, "part-0.parquet"),
-    )
-    metrics_dir = os.path.join(out, "metrics")
-    with open(os.path.join(metrics_dir, "_LATEST"), "w") as fh:
-        fh.write(str(n_batches - 1))
-    real_isdir = os.path.isdir
-    monkeypatch.setattr(
-        os.path, "isdir", lambda p: False if p == metrics_dir else real_isdir(p)
-    )
-    t0 = time.time()
-    totals_side, applied_side = seed_totals(spark, out)
-    seed_side = time.time() - t0
-    monkeypatch.undo()
-    assert totals_side == totals_fast and applied_side == applied_fast
-    assert seed_side < seed_full, (seed_side, seed_full)
-    print(f"seed cost: sidecar generic path {seed_side:.2f}s")
-
-    # and the streaming closure consumes the seed correctly: applying a
-    # NEW batch folds forward; replaying an already-applied batch is a
-    # no-op on the totals
     batch = spark.createDataFrame([("Positive",)], "sentiment string")
     fanout = batch_fanout(out, memory_table="seed_view")
     fanout(batch, n_batches)
@@ -662,15 +589,77 @@ def test_restart_seed_bounded_by_metrics_summary(spark, tmp_path, monkeypatch):
         for r in spark.table("global_temp.seed_view").collect()
     }
     assert view == {"Positive": 2 * n_batches + 1, "Negative": n_batches}
-    fanout(batch, n_batches)  # replay
+    fanout(batch, n_batches)  # replay of the same id
     replay = {
         r["sentiment"]: r["cnt"]
         for r in spark.table("global_temp.seed_view").collect()
     }
     assert replay == view
-    # and the fan-out advanced the sidecar monotonically past our seed
-    with open(os.path.join(out, "metrics", "_LATEST")) as fh:
-        assert int(fh.read()) == n_batches
+    written = {
+        r["sentiment"]: (r["cnt"], r["total"])
+        for r in spark.read.parquet(f"{out}/metrics/batch_id={n_batches}").collect()
+    }
+    assert written == {
+        "Positive": (1, 2 * n_batches + 1),
+        "Negative": (0, n_batches),
+    }
+
+
+def test_crash_after_metrics_before_commit_replays_exactly(spark, tmp_path):
+    """Fault injection at the checkpoint: batches 0 and 1 commit, then
+    the commit record of batch 1 is deleted — a crash after the metrics
+    write and before the checkpoint commit. The restarted query must
+    replay batch 1 over the sinks it already wrote and then run batch 2,
+    leaving every article in ``scored/`` once, metric ``cnt`` sums equal
+    to the scored rows, and exact view totals."""
+    import os
+
+    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
+    inp.mkdir()
+
+    def land(name, rows):
+        with open(inp / name, "w") as f:
+            for row in rows:
+                f.write(json.dumps(row) + "\n")
+
+    def drain():
+        q = start_pipeline(
+            spark, str(inp), str(out), str(ckpt),
+            available_now=True, memory_table="replay_view",
+        )
+        q.awaitTermination(120)
+        return [p["batchId"] for p in q.recentProgress]
+
+    land("a.json", [article(1, "fast fast gains"), article(2, "slow losses")])
+    assert drain() == [0]
+    land("b.json", [article(3, "merge value stream"), article(4, "calm day")])
+    assert drain() == [1]
+    for name in ("1", ".1.crc"):
+        path = ckpt / "commits" / name
+        if path.exists():
+            os.remove(path)
+    land("c.json", [article(5, "slow slump"), article(6, "fast rally")])
+    assert drain() == [1, 2]
+
+    scored = spark.read.parquet(f"{out}/scored")
+    ids = [r["id"] for r in scored.select("id").collect()]
+    assert sorted(ids) == ["id1", "id2", "id3", "id4", "id5", "id6"]
+    expected = {
+        r["sentiment"]: r["n"]
+        for r in scored.groupBy("sentiment").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    metrics = spark.read.parquet(f"{out}/metrics")
+    assert metrics.agg(F.sum("cnt")).head()[0] == len(ids)
+    last = {
+        r["sentiment"]: r["total"]
+        for r in metrics.filter(F.col("batch_id") == 2).collect()
+    }
+    assert last == expected
+    view = {
+        r["sentiment"]: r["cnt"]
+        for r in spark.sql("SELECT * FROM global_temp.replay_view").collect()
+    }
+    assert view == expected
 
 
 def test_latency_listener_wiring(spark, tmp_path):

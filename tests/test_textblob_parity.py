@@ -10,13 +10,14 @@ migrating from the reference will run.
 from __future__ import annotations
 
 import csv
+import re
 from pathlib import Path
 
 import pytest
 
 from real_time_news_sentiment_classification_and_dashboard_using_pyspark_spark.functions.pattern_parity import (
-    parity_polarity_expr,
     pattern_polarity,
+    pattern_polarity_arrow,
 )
 from real_time_news_sentiment_classification_and_dashboard_using_pyspark_spark.pipeline import (
     transform_articles,
@@ -35,7 +36,7 @@ def test_engine_reproduces_reference_golden_csv(spark):
     assert len(golden) == 10
 
     raw = read_articles(spark, str(REF / "news_data.json"))
-    out = transform_articles(raw, polarity_fn=parity_polarity_expr)
+    out = transform_articles(raw, polarity_fn=pattern_polarity_arrow)
     got = {
         (r["title"], r["url"]): (r["polarity"], r["sentiment"])
         for r in out.collect()
@@ -48,6 +49,48 @@ def test_engine_reproduces_reference_golden_csv(spark):
         # reference committed (pandas wrote repr(float) there)
         assert repr(pol) == g["polarity"], (g["title"], repr(pol), g["polarity"])
         assert sent == g["sentiment"], (g["title"], sent, g["sentiment"])
+
+
+def _clean(s):
+    # the reference's clean (work.py:230-235), in Python; the rows below
+    # are ASCII, where Python's and Java's \s agree
+    return None if s is None else re.sub(r"[^a-zA-Z\s]", "", s).lower()
+
+
+def test_engine_pattern_scorer_matches_python_reference(spark):
+    """The pattern-parity scorer inside transform_articles reproduces
+    ``pattern_polarity`` over text cleaned and combined in Python:
+    negation, intensifier chains, punctuation, a null title, and a row
+    dropped for an empty cleaned description."""
+    rows = [
+        ("p1", "Very GOOD news!", "Markets are not bad, past the trouble."),
+        ("p2", None, "A new, top outperform: not very great."),
+        ("p3", "Wild day", "Dramatic and bearish; more potential ahead?"),
+        ("p4", "plain title", "nothing here matches 123"),
+        ("p5", "new", "!!! 42"),
+    ]
+    raw = spark.createDataFrame(
+        [
+            (i, t, d, f"http://x/{i}", "2025-11-21T20:06:38Z", "2025-11-22T13:52:00")
+            for i, t, d in rows
+        ],
+        "id string, title string, description string, url string, "
+        "publishedAt string, fetched_at string",
+    )
+    got = {
+        r["id"]: r["polarity"]
+        for r in transform_articles(raw, polarity_fn=pattern_polarity_arrow).collect()
+    }
+    expected = {}
+    for i, t, d in rows:
+        text = _clean(d)
+        if text is None or not text.strip(" "):
+            continue
+        combined = " ".join(c for c in (_clean(t), text) if c is not None)
+        expected[i] = pattern_polarity(combined)
+    assert set(expected) == {"p1", "p2", "p3", "p4"}
+    assert got == expected
+    assert len(set(got.values())) == 4  # the rows exercise distinct paths
 
 
 # unit coverage of the pattern rules the golden rows don't exercise
